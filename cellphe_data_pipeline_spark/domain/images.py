@@ -752,6 +752,7 @@ def mask_fill_pixels(masks: DataFrame) -> DataFrame:
 #: image coordinates (y grows downward) — the scan order of boundary
 #: tracing below.
 _MOORE_CW = ((0, 1), (1, 1), (1, 0), (1, -1), (0, -1), (-1, -1), (-1, 0), (-1, 1))
+_MOORE_AT = {d: i for i, d in enumerate(_MOORE_CW)}
 
 
 def trace_outer_contour(region: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -778,10 +779,13 @@ def trace_outer_contour(region: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     s = (top, left)
     if len(ys) == 1:
         return np.array([left], dtype=np.int64), np.array([top], dtype=np.int64)
+    # python rows with a background border: grid[y + 1][x + 1], so the
+    # neighbour scan needs no bounds checks
     h, w = region.shape
-
-    def fg(p: tuple[int, int]) -> bool:
-        return 0 <= p[0] < h and 0 <= p[1] < w and bool(region[p[0], p[1]])
+    grid = np.zeros((h + 2, w + 2), dtype=bool)
+    grid[1:-1, 1:-1] = region
+    grid = grid.tolist()
+    ring = _MOORE_CW + _MOORE_CW
 
     # state = (current pixel, backtrack background pixel); start as if
     # entered by the row-major scan (backtrack = West, which is
@@ -790,15 +794,14 @@ def trace_outer_contour(region: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     index: dict[tuple, int] = {state: 0}
     pixels: list[tuple[int, int]] = [s]
     while True:
-        (c, b) = state
-        i0 = _MOORE_CW.index((b[0] - c[0], b[1] - c[1]))
+        (cy, cx), (by, bx) = state
+        i0 = _MOORE_AT[(by - cy, bx - cx)]
         nxt = None
-        for k in range(1, 9):
-            dd = _MOORE_CW[(i0 + k) % 8]
-            cand = (c[0] + dd[0], c[1] + dd[1])
-            if fg(cand):
-                pb = _MOORE_CW[(i0 + k - 1) % 8]
-                nxt = (cand, (c[0] + pb[0], c[1] + pb[1]))
+        for k in range(i0 + 1, i0 + 9):
+            dy, dx = ring[k]
+            if grid[cy + dy + 1][cx + dx + 1]:
+                py, px = ring[k - 1]
+                nxt = ((cy + dy, cx + dx), (cy + py, cx + px))
                 break
         if nxt is None:  # unreachable for len>1 connected regions
             break
@@ -837,7 +840,17 @@ def _largest_component(region: np.ndarray) -> np.ndarray:
     """Largest 4-connected component of a binary region (tie → the one
     whose seed comes first in scan order). Pure-python BFS over the
     (bbox-cropped) region — cost O(area), inside an already-Python
-    kernel. Fast path: one BFS confirms the common connected case."""
+    kernel. Fast path: a region whose every row is one run, with no
+    empty row and each run overlapping the next, is connected — the
+    common case, confirmed without the BFS."""
+    if region.any(axis=1).all():
+        w = region.shape[1]
+        first = region.argmax(axis=1)
+        last = w - 1 - region[:, ::-1].argmax(axis=1)
+        if (region.sum(axis=1) == last - first + 1).all() and (
+            np.maximum(first[1:], first[:-1]) <= np.minimum(last[1:], last[:-1])
+        ).all():
+            return region.astype(bool)
     h, w = region.shape
     seen = np.zeros_like(region, dtype=bool)
     total = int(region.sum())

@@ -2977,7 +2977,7 @@ def test_minhash_spread_gated_on_scan_parallelism(spark):
 
 def test_minhash_verify_hash_shortcircuit_matches_intersect(spark):
     """r17 (verdict item 5): the verify's equal-set short-circuit
-    (precomputed md5 witness + size compare) must change no values —
+    (precomputed xxhash64 witness + size compare) must change no values —
     identical docs still score jaccard 1.0, near-dups still take the
     intersect path, and the family (d3/d10/d14) agrees pair-for-pair
     with the always-intersect oracle expression."""

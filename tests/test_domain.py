@@ -768,6 +768,196 @@ def test_static_features_multi_timelapse_path_join(spark):
     assert len(out1) == 1 and out1[0]["CellID"] == 10
 
 
+#: sha256 over the float64 bytes of every feature column (in
+#: STATIC_FEATURE_NAMES order) of the pin input below, recorded with the
+#: per-cell kernel the frame body replaced: the rewrite must reproduce
+#: the old kernel's bits, not just agree with itself.
+M4_PINNED_BITS = {
+    "contour": "e508eaef5de74155a4529b62358016535d81cfd9fda1bf137599329437f683f2",
+    "contour_tex": "904ddb1f88ad122170811f5537f2e17657f0709e5e16c1e889042b95a20b4282",
+    "filled_tex": "fa7becd423e7c60eaaacd075abebdff8b30977d55f0904226d1b15403efffed7",
+}
+
+
+def test_frame_features_reproduce_pinned_kernel_bits():
+    """Benchmark-density input (4 frames of a 256x256 timelapse with 60
+    cells, Otsu masks, traced contours), fed to the frame body one frame
+    at a time: the plain frames as the pipeline sees them, the same
+    contours over a seeded texture (so the intensity, quantile and GLCM
+    blocks see varied values), and the filled regions over that texture
+    (long, unordered coordinate lists)."""
+    import hashlib
+
+    from cellphe_data_pipeline_spark.domain.features import (
+        STATIC_FEATURE_NAMES,
+        _frame_features,
+        _traced_cells,
+    )
+    from cellphe_data_pipeline_spark.domain.images import (
+        _otsu_segment,
+        decode_frame,
+        make_fake_timelapse,
+    )
+
+    def normalised(a):
+        img = a.astype("float64")
+        lo, hi = img.min(), img.max()
+        return (img - lo) / (hi - lo) if hi > lo else img
+
+    frames = decode_frame(
+        make_fake_timelapse(seed=0, height=256, width=256, n_frames=4, n_cells=60)
+    )
+    rng = np.random.RandomState(0)
+    blocks = {name: [] for name in M4_PINNED_BITS}
+    for f in frames:
+        m = _otsu_segment(f)
+        textured = normalised(f + rng.randint(0, 56, size=f.shape).astype(np.uint8))
+        labels = [int(v) for v in np.unique(m)[1:]]
+        found, contours = _traced_cells(m, labels)
+        assert found == list(range(len(labels)))
+        filled = [np.column_stack(np.nonzero(m == v)[::-1]) for v in labels]
+        for name, img, cells in (
+            ("contour", normalised(f), contours),
+            ("contour_tex", textured, contours),
+            ("filled_tex", textured, filled),
+        ):
+            kept, feats = _frame_features(img, cells)
+            assert len(kept) == len(cells)
+            blocks[name].append(feats)
+    for name, want in M4_PINNED_BITS.items():
+        feats = np.concatenate(blocks[name])
+        assert feats.shape == (219, len(STATIC_FEATURE_NAMES))
+        h = hashlib.sha256()
+        for col in feats.T:
+            h.update(np.ascontiguousarray(col).tobytes())
+        assert h.hexdigest() == want, name
+
+
+def test_frame_features_edge_cases_keep_rows_aligned():
+    """A frame with no cells yields no rows; a cell with fewer than 3
+    coords is skipped without shifting the rows of the cells after it;
+    every row equals that cell's one-cell run bit for bit."""
+    from cellphe_data_pipeline_spark.domain.features import (
+        STATIC_FEATURE_NAMES,
+        _cell_features,
+        _frame_features,
+    )
+
+    img = np.random.RandomState(3).rand(24, 24)
+    kept, feats = _frame_features(img, [])
+    assert len(kept) == 0 and feats.shape == (0, len(STATIC_FEATURE_NAMES))
+    square = [(x, y) for x in range(4, 9) for y in range(3, 7)]
+    ring = [(10, 10), (11, 10), (12, 11), (11, 12), (10, 12), (9, 11)]
+    cells = [square, [(1, 1), (2, 1)], [], ring, [(5, 5)]]
+    kept, feats = _frame_features(img, cells)
+    assert kept.tolist() == [0, 3]
+    for row, i in zip(feats, kept):
+        want = _cell_features(img, np.array(cells[i], dtype="int64"))
+        assert row.tobytes() == np.array([want[n] for n in STATIC_FEATURE_NAMES]).tobytes()
+
+
+def _fused_rows(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "path string, frame_index int, height int, width int, data binary, mask binary",
+    )
+
+
+def test_static_features_fused_edge_cases(spark):
+    """Fused entry: a kept label absent from the mask is skipped; a
+    label split into two blobs is measured on its larger blob; a label
+    too small for a 3-point contour is skipped without shifting the
+    next cell's row; two timelapses share frame index 0, each measured
+    on its own raster; a frame whose only kept cell is skipped yields
+    no rows."""
+    from cellphe_data_pipeline_spark.domain.features import (
+        STATIC_FEATURE_NAMES,
+        _cell_features,
+        _payload_image,
+        static_features_fused,
+    )
+    from cellphe_data_pipeline_spark.domain.images import trace_outer_contour
+
+    rng = np.random.RandomState(9)
+    h = w = 16
+    mask = np.zeros((h, w), dtype=np.uint16)
+    mask[1:5, 1:5] = 1  # plain square
+    mask[7:11, 1:4] = 2  # split label: 4x3 blob ...
+    mask[13:15, 10:11] = 2  # ... and a 2-pixel fragment
+    mask[1, 10:12] = 3  # 2 pixels: contour of 2 points, skipped
+    mask[8:12, 8:13] = 4  # after the skipped cell
+    tiny = np.zeros((h, w), dtype=np.uint16)
+    tiny[3, 3] = 3
+    raster = {p: rng.randint(0, 256, (h, w)).astype(np.uint8) for p in ("a", "b", "c")}
+    fused = _fused_rows(spark, [
+        ("a", 0, h, w, bytearray(raster["a"].tobytes()), bytearray(mask.tobytes())),
+        ("b", 0, h, w, bytearray(raster["b"].tobytes()), bytearray(mask.tobytes())),
+        ("a", 1, h, w, bytearray(raster["c"].tobytes()), bytearray(tiny.tobytes())),
+    ])
+    keep = spark.createDataFrame(
+        [("a", 0, c, 100 + c) for c in (1, 2, 3, 4, 9)] + [("b", 0, 1, 7), ("a", 1, 3, 103)],
+        "path string, FrameID int, CellID int, TRACK_ID int",
+    )
+    out = {(r["path"], r["FrameID"], r["CellID"]): r for r in static_features_fused(fused, keep).collect()}
+    assert sorted(out) == [("a", 0, 1), ("a", 0, 2), ("a", 0, 4), ("b", 0, 1)]
+    assert out[("a", 0, 4)]["ROI_filename"] == "0-104-4"
+    assert out[("b", 0, 1)]["ROI_filename"] == "0-007-1"
+
+    def expected(path, region, y0, x0):
+        xs, ys = trace_outer_contour(region)
+        coords = np.column_stack([xs + x0, ys + y0])
+        return _cell_features(_payload_image(raster[path].tobytes(), h, w), coords)
+
+    big_blob = np.ones((4, 3), dtype=bool)
+    for key, want in (
+        (("a", 0, 1), expected("a", mask[1:5, 1:5] == 1, 1, 1)),
+        (("a", 0, 2), expected("a", big_blob, 7, 1)),
+        (("a", 0, 4), expected("a", mask[8:12, 8:13] == 4, 8, 8)),
+        (("b", 0, 1), expected("b", mask[1:5, 1:5] == 1, 1, 1)),
+    ):
+        assert [out[key][n] for n in STATIC_FEATURE_NAMES] == [want[n] for n in STATIC_FEATURE_NAMES], key
+    assert out[("a", 0, 1)]["Int_mean"] != out[("b", 0, 1)]["Int_mean"]
+
+
+def test_m4_entries_read_rasters_by_byte_count(spark):
+    """Both entry points decide raster vs container by byte count: an
+    8-bit raster whose first bytes spell the FAKE1 container magic is
+    still a raster, and a 16-bit raster (the 8-bit one x257) gives the
+    same features to 1e-12."""
+    from cellphe_data_pipeline_spark.domain.features import (
+        STATIC_FEATURE_NAMES,
+        static_features,
+        static_features_fused,
+    )
+
+    h = w = 12
+    r8 = np.random.RandomState(4).randint(0, 256, (h, w)).astype(np.uint8)
+    r8.ravel()[:5] = np.frombuffer(b"FAKE1", dtype=np.uint8)
+    r16 = r8.astype(np.uint16) * 257
+    mask = np.zeros((h, w), dtype=np.uint16)
+    mask[2:8, 3:9] = 5
+    payloads = {"r8": bytearray(r8.tobytes()), "r16": bytearray(r16.tobytes())}
+    frames = spark.createDataFrame(
+        [(p, 0, h, w, d) for p, d in payloads.items()],
+        "path string, frame_index int, height int, width int, data binary",
+    )
+    square = [{"x": x, "y": y} for x in range(3, 9) for y in range(2, 8)]
+    rois = spark.createDataFrame(
+        [(p, 0, 5, "0-5", square) for p in payloads],
+        "path string, FrameID int, CellID int, ROI_filename string,"
+        " coords array<struct<x:int,y:int>>",
+    )
+    fused = _fused_rows(spark, [(p, 0, h, w, d, bytearray(mask.tobytes())) for p, d in payloads.items()])
+    keep = spark.createDataFrame(
+        [(p, 0, 5, 1) for p in payloads], "path string, FrameID int, CellID int, TRACK_ID int"
+    )
+    for out in (static_features(frames, rois), static_features_fused(fused, keep)):
+        rows = {r["path"]: r for r in out.collect()}
+        assert sorted(rows) == ["r16", "r8"]
+        for n in STATIC_FEATURE_NAMES:
+            assert math.isclose(rows["r8"][n], rows["r16"][n], rel_tol=1e-12, abs_tol=1e-12), n
+
+
 def test_glcm_and_haar2d_features_numpy_oracle():
     """Independent cross-check of the new texture blocks: GLCM features
     on a hand-computable 2x2 patch, Haar 2-D energies on a patch with a

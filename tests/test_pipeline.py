@@ -382,13 +382,16 @@ def test_pipeline_config_selects_otsu_segmentation(spark, tmp_path):
 
 
 def test_static_features_fused_matches_staged_branch(spark):
-    """r17: the pipeline's fused M4 branch (contour tracing inside the
-    feature kernel over the fused checkpoint rows) must reproduce the
-    staged mask_rois -> roi_filename -> static_features branch
-    row-for-row, ROI names included."""
+    """Both M4 entry points run the same frame body, so what can still
+    drift between the pipeline's fused branch and the staged
+    mask_rois -> roi_filename -> static_features branch is what each
+    feeder hands that body: the ordered contour coords of every kept
+    cell and its ROI name. Pin both, then the rows end to end."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from cellphe_data_pipeline_spark.domain.features import (
+        _traced_cells,
         static_features,
         static_features_fused,
     )
@@ -431,6 +434,26 @@ def test_static_features_fused_matches_staged_branch(spark):
         id_col="CellID",
         out_col="ROI_filename",
     ).drop("TRACK_ID")
+
+    # coords: the staged feeder passes mask_rois' ordered contour; the
+    # fused feeder traces the same cells from the checkpointed mask
+    staged_coords = {
+        (r["path"], r["FrameID"], r["CellID"]): [(c["x"], c["y"]) for c in r["coords"]]
+        for r in kept_rois.collect()
+    }
+    assert staged_coords
+    kept_by_frame: dict = {}
+    for path, frame, cell in staged_coords:
+        kept_by_frame.setdefault((path, frame), []).append(cell)
+    for r in fused.select("path", "frame_index", "height", "width", "mask").collect():
+        cells = kept_by_frame.pop((r["path"], r["frame_index"]), [])
+        m = np.frombuffer(r["mask"], dtype=np.uint16).reshape(r["height"], r["width"])
+        found, coords = _traced_cells(m, cells)
+        assert found == list(range(len(cells)))
+        for cell, c in zip(cells, coords):
+            assert c.tolist() == [list(p) for p in staged_coords[(r["path"], r["frame_index"], cell)]]
+    assert not kept_by_frame
+
     staged = static_features(out["frames"], kept_rois)
     fused_feats = static_features_fused(fused, keep)
 
@@ -442,9 +465,13 @@ def test_static_features_fused_matches_staged_branch(spark):
     srows = staged.collect()
     frows = fused_feats.select(*staged.columns).collect()
     assert len(srows) > 0
-    # exact equality including float bits: identical numpy math on
-    # identical coords and rasters
+    # ROI names: same 3-part FRAME-TRACK-ID names, cell for cell
+    def names(rows):
+        return sorted((r["path"], r["FrameID"], r["CellID"], r["ROI_filename"]) for r in rows)
+
+    assert names(frows) == names(srows)
+    # and the rows end to end, float bits included
     assert key(frows) == key(srows)
-    # and the pipeline's features stage IS the fused form now
+    # and the pipeline's features stage IS the fused form
     prows = out["features"].select(*staged.columns).collect()
     assert key(prows) == key(srows)
