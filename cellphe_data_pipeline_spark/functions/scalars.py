@@ -63,6 +63,34 @@ def natural_sort_key(col: Column) -> Column:
     )
 
 
+def opaque_zero() -> Column:
+    """A statically-zero NON-deterministic double, ``rand(0) * 0.0``:
+    the engine's one Catalyst barrier. Used by
+    ``operators.dedup._verify_set_pairs`` (the set-overlap count is
+    evaluated once) and ``operators.text.gopher_rules(gate_mask=...)``
+    (the rule gate stays above the tokenise/count projections).
+
+    It rests on two Catalyst facts, both on the Spark-upgrade checklist
+    in SCALE.md:
+
+    1. A project field that is non-deterministic is a barrier.
+       CollapseProject does not inline a non-deterministic alias into
+       its consumers, and PushPredicateThroughNonJoin pushes a filter
+       through a project only when every field is deterministic. So
+       the field is computed once, in its own projection, and filters
+       above it stay above it. A non-deterministic FILTER condition is
+       not enough: Spark 4 pushes it through deterministic projects.
+    2. The term is not folded away. ConstantFolding keeps ``rand``
+       because it is non-deterministic, and the multiply by 0.0 hides
+       it from the rand-range simplification that would fold a bare
+       ``rand(0) > 1.0`` to false.
+
+    Values are unchanged: added to an integral field (cast to its
+    type) the term is exactly 0, and ``opaque_zero() > 1.0`` OR-ed onto
+    a predicate is always false."""
+    return F.rand(0) * F.lit(0.0)
+
+
 def portable_hash64(col: Column, seed: str = "") -> Column:
     """Deterministic 32-bit-range hash computable identically in Spark and
     ANSI SQL engines: first 8 hex digits of md5, parsed base-16.

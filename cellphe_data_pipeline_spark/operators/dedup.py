@@ -12,9 +12,11 @@ engine's training-data-pipeline extensions, designed shuffle-first:
   aggregates (single shuffle, map-side combinable — NOT an explode×16,
   which would multiply shuffle volume 16x at 100 TB) → 4 bands of 4 →
   band-bucket self-join on (band, band_key) → exact-Jaccard verify of
-  the (tiny) candidate set, CANDIDATE-FIRST (r7): shingles are joined
-  onto the candidate pairs, never onto each other. The expensive
-  all-pairs shingle join never happens anywhere in the LSH path.
+  the (tiny) candidate set. Every near-dup operator (minhash,
+  incremental, containment) feeds its candidates to ONE verify,
+  :func:`_verify_set_pairs`: each doc's shingle-set ARRAY is joined
+  onto the candidate pairs and |A∩B| is computed row-wise. No shingle
+  is ever joined onto another shingle in the LSH path.
 - ``pairwise_jaccard`` without candidates: exact all-pairs baseline
   (shingle self-join). Quadratic per hot shingle — correct at test
   scale, kept ONLY as the oracle-verifiable baseline (d5).
@@ -29,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cellphe_data_pipeline_spark.functions.scalars import round_z
+from cellphe_data_pipeline_spark.functions.scalars import opaque_zero, round_z
 
 from cellphe_data_pipeline_spark.checkpoint import cut_lineage
 
@@ -242,24 +244,91 @@ def lsh_candidate_pairs(band_keys: DataFrame, dedup: bool = True) -> DataFrame:
     return pairs.distinct() if dedup else pairs
 
 
-def _eval_once_barrier(col, cast_type: str):
-    """Append a STATICALLY-ZERO non-deterministic term to an expensive
-    projection field so it is evaluated exactly ONCE (r17).
+def _shingle_set_cut(
+    df: DataFrame, text_col: str, id_col: str, n: int, name: str
+) -> DataFrame:
+    """The verify's input: (doc_id, sh_set, _ha) behind a lazy lineage
+    cut, one row per doc. ``sh_set`` is :func:`shingle_arrays`' per-doc
+    DISTINCT shingle set; ``_ha = xxhash64(sh_set)`` is computed ONCE
+    per doc inside the cut as an O(1) equal-set witness for
+    :func:`_verify_set_pairs` (r17). xxhash64 hashes the array natively
+    (element boundaries included — no separator ambiguity, no concat
+    materialisation; measured cheaper than an md5-of-concat in the
+    cut)."""
+    return cut_lineage(
+        shingle_arrays(df, text_col, id_col, n).withColumn(
+            "_ha", F.xxhash64(F.col("sh_set"))
+        ),
+        eager=False,
+        name=name,
+    )
 
-    CollapseProject re-inlines deterministic aliases into every
-    consumer, and Filter/Project are separate codegen operators with no
-    cross-operator subexpression elimination — measured on the c24
-    verify: the aliased ``size(array_intersect(...))`` ran ~4x per row
-    (once for the output column, twice inside the jaccard ratio, once
-    per filter conjunct), 3.57s vs 0.91s for a single evaluation over
-    the same joined rows. A non-deterministic project field blocks both
-    the re-inlining and predicate pushdown through it — the same two
-    Catalyst facts the gopher ``gate_mask`` barrier pins
-    (ConstantFolding keeps ``rand()`` because it is non-deterministic;
-    the ``* 0.0`` hides the rand-range constant fold). The added term
-    is exactly 0, so values are unchanged; the SCALE.md Spark-upgrade
-    checklist covers the fragility."""
-    return col + (F.rand(0) * F.lit(0.0)).cast(cast_type)
+
+def _verify_set_pairs(
+    cand: DataFrame, left: DataFrame, right: DataFrame
+) -> DataFrame:
+    """The ONE exact set-overlap verify of the near-dup family:
+    candidate pairs (doc_a, doc_b) → (doc_a, doc_b, n_inter bigint,
+    _na, _nb), with ``left``/``right`` :func:`_shingle_set_cut` frames
+    for the doc_a/doc_b sides. Candidate generation and scoring stay
+    with each operator (the candidate/verify split of "Continuously
+    Adaptive Similarity Search", SIGMOD 2020).
+
+    Row-wise (r16): both sides' set ARRAYS attach to the candidate
+    pairs and n_inter = size(array_intersect) — one row per candidate,
+    never |candidates| x shingles-per-doc exploded rows or a
+    (doc_b, shingle) compound-key corpus join; the set sizes _na/_nb
+    are row-wise size(). Both arrays are per-doc DISTINCT sets, so
+    n_inter is exactly the old shingle-join match count. The caller
+    must pass DISTINCT candidate pairs: each row is one pair's count.
+
+    Equal sets (equal ``_ha`` AND equal size) skip the O(n) intersect:
+    |A∩A| = |A| exactly, so a K-copy boilerplate doc's K² candidate
+    pairs cost O(K²) row handling instead of O(K² · shingles-per-doc)
+    (r17 skew probe: 13.05s → 0.22s). This is the one hash gate in the
+    engine that can change a VALUE: a 64-bit collision between two
+    different equal-size sets (~2^-64 per pair) would report
+    n_inter = |A|, a score of exactly 1.0. Accepted like every other
+    hash gate here; _ha itself never reaches the output.
+
+    n_inter is projected ONCE behind :func:`opaque_zero`: without it
+    the scorer's ratio and filter conjuncts re-inline the whole
+    intersect ~4x per candidate row (measured 3.57s → 0.91s on the c24
+    verify). bigint: containment emits n_inter and the oracle gate
+    compares numeric TYPES (the pre-r16 count aggregate was long)."""
+    ab = cand.join(
+        left.withColumnsRenamed({"doc_id": "doc_a", "sh_set": "_sa", "_ha": "_hha"}),
+        "doc_a",
+    ).join(
+        right.withColumnsRenamed({"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}),
+        "doc_b",
+    )
+    n_inter = F.when(
+        (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")),
+        F.size("_sa"),
+    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
+    return ab.select(
+        "doc_a",
+        "doc_b",
+        (n_inter + opaque_zero().cast("bigint")).alias("n_inter"),
+        F.size("_sa").alias("_na"),
+        F.size("_sb").alias("_nb"),
+    )
+
+
+def _jaccard_scores(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Jaccard tail of the minhash and incremental verifies:
+    (doc_a, doc_b, jaccard) from :func:`_verify_set_pairs` rows. The
+    ``n_inter >= 1`` gate reproduces the old inner shingle-join's row
+    set (pairs sharing at least one shingle) for ANY threshold; the
+    threshold applies to the RAW ratio and rounding comes after, the
+    same order as :func:`pairwise_jaccard` and the oracle, so nothing
+    is admitted at the rounding boundary."""
+    n = F.col("n_inter")
+    jac = n.cast("double") / (F.col("_na") + F.col("_nb") - n)
+    return pairs.filter((n >= 1) & (jac >= F.lit(threshold))).select(
+        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
+    )
 
 
 def _spread_docs(df: DataFrame, id_col: str) -> DataFrame:
@@ -319,13 +388,9 @@ def minhash_near_duplicates(
     measured 5x slower staged, 50x monolithic (r8 hierarchy note in
     :func:`minhash_band_key_rows`).
 
-    Equivalence to the pairwise_jaccard verify (oracle-reproven r16):
-    both arrays are per-doc DISTINCT sets, so size(array_intersect) is
-    exactly the old per-pair match count; na/nb = size() equal the old
-    per-doc counts; the ni >= 1 gate reproduces the old inner
-    shingle-join's "pairs sharing at least one shingle" row set for
-    ANY threshold; the jaccard double is the same exact-integer
-    division. At cluster scale prefer the durable form of the cuts:
+    Equivalence to the pairwise_jaccard verify (oracle-reproven r16) is
+    argued on :func:`_verify_set_pairs` and :func:`_jaccard_scores`.
+    At cluster scale prefer the durable form of the cuts:
     publish to parquet (S15) and read back, which survives executor
     loss where a localCheckpoint's unreplicated blocks do not."""
     # Spread the DOC rows across cores before shingling (r16):
@@ -347,28 +412,7 @@ def minhash_near_duplicates(
     # either way, so the repartition never elided a downstream
     # exchange — parallelism is all it ever bought (r16 record, 8b).
     spread = _spread_docs(df, id_col)
-    # _ha: array hash computed ONCE per doc inside the
-    # cut (r17, verdict item 5) — an O(1) exact-duplicate witness for
-    # the verify below. The r16 attempt short-circuited on ARRAY
-    # equality and measured no gain (array compare is itself O(n) on
-    # the equal-heavy candidate workload); the precomputed hash makes
-    # the equal branch constant-time, so a K-copy boilerplate doc's
-    # K² candidate pairs cost O(K²) row handling instead of
-    # O(K² · shingles-per-doc) intersect compute. xxhash64 hashes the
-    # ARRAY natively (element boundaries included — no separator
-    # ambiguity, no concat materialisation; measured cheaper than an
-    # md5-of-concat in the cut); the size compare stays as a cheap
-    # second witness. 64-bit collisions across equal-size different
-    # sets are accepted like every other hash gate in this engine
-    # (_ha never reaches the oracle — it gates an internal branch
-    # whose two arms agree whenever the sets ARE equal).
-    arr = cut_lineage(
-        shingle_arrays(spread, text_col, id_col, n).withColumn(
-            "_ha", F.xxhash64(F.col("sh_set"))
-        ),
-        eager=False,
-        name="shingle_arrays",
-    )
+    arr = _shingle_set_cut(spread, text_col, id_col, n, "shingle_arrays")
     sh = arr.select("doc_id", F.explode("sh_set").alias("sh"))
     # band keys behind their own lazy cut: the LSH self-join references
     # this table TWICE, and a localCheckpoint reports
@@ -385,36 +429,7 @@ def minhash_near_duplicates(
     # cross-band multiplicity must collapse here (the old
     # candidate-first pairwise_jaccard did the same distinct itself)
     cand = lsh_candidate_pairs(bk, dedup=True)
-    a = cand.join(
-        arr.withColumnsRenamed({"doc_id": "doc_a", "sh_set": "_sa", "_ha": "_hha"}),
-        "doc_a",
-    )
-    ab = a.join(
-        arr.withColumnsRenamed({"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}),
-        "doc_b",
-    )
-    # identical sets (equal hash + equal size) skip the O(n) intersect:
-    # |A∩A| = |A| exactly, so values are unchanged. The intersect is
-    # projected ONCE behind the eval-once barrier — without it the
-    # jaccard ratio and the two filter conjuncts re-inline the whole
-    # intersect ~4x per candidate row (measured 3.57s -> 1.1s on the
-    # c24 corpus verify; see _eval_once_barrier).
-    ni = F.when(
-        (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")),
-        F.size("_sa"),
-    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
-    scored = ab.select(
-        "doc_a",
-        "doc_b",
-        _eval_once_barrier(ni, "int").alias("_ni"),
-        (F.size("_sa") + F.size("_sb")).alias("_nab"),
-    ).withColumn(
-        "jaccard",
-        F.col("_ni").cast("double") / (F.col("_nab") - F.col("_ni")),
-    )
-    return scored.filter(
-        (F.col("_ni") >= 1) & (F.col("jaccard") >= F.lit(threshold))
-    ).select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    return _jaccard_scores(_verify_set_pairs(cand, arr, arr), threshold)
 
 
 def simhash_codes(
@@ -1161,77 +1176,6 @@ def duplicated_spans(
     )
 
 
-def minhash_band_key_cols(
-    text_col, num_hashes: int = 16, band_size: int = 4, n: int = 3
-):
-    """MinHash LSH band keys as ONE stateless Column expression:
-    array<struct<band, band_key>> computed per row with zero shuffle —
-    same hash family and band-key formula as :func:`minhash_band_keys`
-    (md5("g{g}"||shingle) sliced into 8-hex windows; order-independent
-    weighted band sums), so the two paths are interchangeable.
-
-    When to use which: the groupBy form materialises shingles as rows
-    (reusable by Jaccard verify, map-side-combinable when shingle rows
-    already exist); this expression form is the zero-shuffle signature
-    for one-row-per-doc pipelines — and the ONLY shape a streaming
-    source can use, since a per-doc groupBy would be a stateful
-    aggregation. Docs with < n tokens yield an EMPTY array — explode
-    drops them, and callers must NOT add a null/size filter after the
-    explode (see the inline comment: the optimizer rewrites such a
-    filter into a per-element predicate that re-runs the whole
-    signature per band — measured 64x). The 4-hashes-per-md5 digest
-    trick means Catalyst's common subexpression elimination evaluates
-    4 md5s per shingle, not 16.
-    """
-    t = F.split(F.trim(F.regexp_replace(text_col, r"\s+", " ")), " ")
-    sh = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(t, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-    def hash_min(s: int):
-        # NOTE: the inner lambda must be single-arg — F.transform passes
-        # the element INDEX to any second parameter, clobbering a
-        # default-bound loop variable.
-        g, w = s // 4, s % 4
-
-        def one(c):
-            dig = F.md5(F.concat(F.lit(f"g{g}"), c))
-            return F.conv(F.substring(dig, 1 + 8 * w, 8), 16, 10).cast("bigint")
-
-        return F.array_min(F.transform(sh, one))
-
-    mins = [hash_min(s) for s in range(num_hashes)]
-    n_bands = num_hashes // band_size
-    bands = []
-    for b in range(n_bands):
-        key = sum(
-            (mins[b * band_size + i] * F.lit(i + 1) for i in range(band_size)),
-            start=F.lit(0),
-        )
-        bands.append(
-            F.struct(F.lit(b).alias("band"), key.cast("bigint").alias("band_key"))
-        )
-    # Short docs (< n tokens) yield an EMPTY array, not null band keys:
-    # explode() then drops them with no downstream filter — a
-    # post-explode IS NOT NULL filter gets optimizer-rewritten into a
-    # per-element predicate on the array-under-construction,
-    # re-evaluating the full signature per band. NOTE (r8): even
-    # without that footgun, this monolithic Column inlines the
-    # shingle/digest sub-expressions into all 16 mins and HOFs are
-    # interpreted (no codegen CSE) — re-measured ~150s at sf0.1 vs
-    # ~13s for the staged minhash_band_key_rows and ~2.7s for the
-    # groupBy row form. Treat this function as the semantic SPEC;
-    # hot paths use minhash_band_key_rows (streaming) or
-    # minhash_band_keys (batch).
-    return F.when(F.size(t) >= n, F.array(*bands)).otherwise(
-        F.array().cast(f"array<struct<band:int,band_key:bigint>>")
-    )
-
-
 def minhash_band_key_rows(
     df: DataFrame,
     text_col: str = "text",
@@ -1242,14 +1186,14 @@ def minhash_band_key_rows(
     n: int = 3,
 ) -> DataFrame:
     """STAGED-PROJECTION expression-form band keys (r8): the same
-    (doc_id, band, band_key) rows as :func:`minhash_band_keys` and
-    :func:`minhash_band_key_cols` (bit-identical, equality-tested),
-    still zero shuffle and stateless (streaming-legal), but each
+    (doc_id, band, band_key) rows as :func:`minhash_band_keys`
+    (bit-identical; pinned by test and by d3b against the DuckDB
+    oracle), zero shuffle and stateless (streaming-legal), where each
     pipeline level — shingle array, md5 digest arrays, per-window
     mins, band structs — is its own ``select`` so downstream levels
     reference ATTRIBUTES instead of re-inlined expressions.
 
-    Why this matters (r8 measurement, sf0.1, noop sink): the
+    Why this matters (r8 measurement, sf0.1, noop sink): a
     single-Column form inlines the shingle/digest sub-expressions into
     every one of the 16 min computations, and higher-order functions
     (transform/array_min/aggregate) are NOT whole-stage-codegen'd —
@@ -1262,12 +1206,15 @@ def minhash_band_key_rows(
     mins are one map-side-combinable hash aggregate. Hierarchy, fastest
     first: groupBy rows (batch default) > staged projections (streaming,
     where a per-doc groupBy would be a stateful aggregation) >
-    monolithic Column (kept as the semantic spec; avoid in hot paths).
+    monolithic Column (removed; never use in hot paths).
 
     `passthrough` columns (e.g. the event-time column a streaming
     join needs) ride alongside doc_id through every stage. Docs with
-    < n tokens vanish at the explode (empty array), preserving
-    minhash_band_key_cols's no-post-filter contract.
+    < n tokens vanish at the explode (empty array) with NO Filter in
+    the plan (pinned by test): a post-explode IS NOT NULL filter gets
+    optimizer-rewritten into a per-element predicate on the
+    array-under-construction, re-running the whole signature per band
+    (the r5b 64x finding).
     """
     t = F.split(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")), " ")
     sh = F.when(
@@ -1285,8 +1232,8 @@ def minhash_band_key_rows(
 
     def dig_fn(g: int):
         # single-arg lambda factory: a second lambda parameter would
-        # receive the element INDEX from F.transform (see the
-        # minhash_band_key_cols NOTE)
+        # receive the element INDEX from F.transform, clobbering a
+        # default-bound loop variable
         return lambda c: F.md5(F.concat(F.lit(f"g{g}"), c))
 
     n_digests = -(-num_hashes // 4)
@@ -1327,8 +1274,8 @@ def minhash_band_key_rows(
         )
     # short docs: empty _sh -> array_min over empty = NULL mins; guard
     # the band array on the (attribute, cheap) first min so they
-    # vanish at the explode — the same no-post-filter contract as the
-    # Column form, at zero re-evaluation cost
+    # vanish at the explode — no post-explode filter, at zero
+    # re-evaluation cost
     band_arr = F.when(F.col("_h0").isNotNull(), F.array(*bands)).otherwise(
         F.array().cast("array<struct<band:int,band_key:bigint>>")
     )
@@ -1378,25 +1325,11 @@ def incremental_near_duplicates(
     # "checkpoint saved nothing" measurement predates that duplicated
     # subtree). In the real daily-ingest deployment the index side
     # comes from the PERSISTED band-key/shingle tables (S15) anyway,
-    # so only the small batch side ever recomputes.
-    # _ha: the r17 O(1) exact-duplicate witness (see
-    # minhash_near_duplicates) — a re-ingested identical doc is the
-    # COMMON case for the daily-ingest shape, so its verify pairs skip
-    # the O(shingles) intersect entirely
-    arr_idx = cut_lineage(
-        shingle_arrays(index_docs, text_col, id_col, n).withColumn(
-            "_ha", F.xxhash64(F.col("sh_set"))
-        ),
-        eager=False,
-        name="inc-idx-arrays",
-    )
-    arr_new = cut_lineage(
-        shingle_arrays(new_docs, text_col, id_col, n).withColumn(
-            "_ha", F.xxhash64(F.col("sh_set"))
-        ),
-        eager=False,
-        name="inc-new-arrays",
-    )
+    # so only the small batch side ever recomputes. The equal-set
+    # witness matters most here: a re-ingested identical doc is the
+    # COMMON daily-ingest case, and its verify pairs skip the intersect.
+    arr_idx = _shingle_set_cut(index_docs, text_col, id_col, n, "inc-idx-arrays")
+    arr_new = _shingle_set_cut(new_docs, text_col, id_col, n, "inc-new-arrays")
     sh_idx = arr_idx.select("doc_id", F.explode("sh_set").alias("sh"))
     sh_new = arr_new.select("doc_id", F.explode("sh_set").alias("sh"))
     bk_idx = minhash_band_keys(sh_idx, num_hashes, band_size).withColumnRenamed(
@@ -1410,50 +1343,10 @@ def incremental_near_duplicates(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    # Row-wise set-algebra verify (r16, the minhash_near_duplicates 8b
-    # shape): attach each side's per-doc DISTINCT shingle-set ARRAY to
-    # the candidate pairs and compute |A∩B| as size(array_intersect) —
-    # one row per candidate instead of |candidates| x shingles-per-doc
-    # exploded rows, no (doc_b, shingle) compound-key join of the
-    # batch side, and the two per-side size aggregations collapse to
-    # row-wise size(). The pre-r16 candidate-first exploded join is
-    # preserved in spirit: work is still bounded by the candidate set,
-    # never by shingle-frequency quadratics. The ``_inter >= 1`` gate
-    # reproduces the old inner shingle-join's row set (pairs sharing
-    # at least one shingle) for ANY threshold.
-    a = cand.join(
-        arr_idx.withColumnsRenamed(
-            {"doc_id": "doc_a", "sh_set": "_sa", "_ha": "_hha"}
-        ),
-        "doc_a",
-    )
-    ab = a.join(
-        arr_new.withColumnsRenamed(
-            {"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}
-        ),
-        "doc_b",
-    )
-    # intersect projected ONCE behind the eval-once barrier (see
-    # minhash_near_duplicates / _eval_once_barrier)
-    inter = F.when(
-        (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")),
-        F.size("_sa"),
-    ).otherwise(F.size(F.array_intersect("_sa", "_sb")))
-    scored = ab.select(
-        "doc_a",
-        "doc_b",
-        _eval_once_barrier(inter, "int").alias("_inter"),
-        (F.size("_sa") + F.size("_sb")).alias("_nab"),
-    )
-    # threshold on the RAW ratio, round after — the same order as
-    # pairwise_jaccard, so the incremental result is exactly the full
-    # self-join result restricted to (index, new) pairs even at the
-    # rounding boundary
-    jac = F.col("_inter") / (F.col("_nab") - F.col("_inter")).cast("double")
-    return (
-        scored.filter((F.col("_inter") >= 1) & (jac >= threshold))
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
+    # threshold on the RAW ratio, round after (_jaccard_scores): the
+    # incremental result is exactly the full self-join result
+    # restricted to (index, new) pairs even at the rounding boundary
+    return _jaccard_scores(_verify_set_pairs(cand, arr_idx, arr_new), threshold)
 
 
 def containment_near_duplicates(
@@ -1484,25 +1377,16 @@ def containment_near_duplicates(
     whose entire overlap is corpus-common boilerplate are missed,
     and those are d12 line-dedup's territory, not containment's.
 
-    Verify is candidate-first (the incremental_near_duplicates
-    contract): shingles attach to the (distinct) candidate pairs, so
-    the intermediate is |candidates| x shingles-per-doc. Output:
-    (doc_a, doc_b, n_inter, containment) with doc_a < doc_b.
+    Verify is :func:`_verify_set_pairs`, shared with the Jaccard
+    operators: each doc's shingle-set array attaches to the (distinct)
+    candidate pairs and |A∩B| is computed row-wise, one row per
+    candidate. Output: (doc_a, doc_b, n_inter, containment) with
+    doc_a < doc_b.
     """
-    # Checkpoint the per-doc shingle-set ARRAYS (r16, the 8b shape):
-    # the rare-shingle blocking still needs exploded rows (derived
-    # here by exploding the CHECKPOINTED attribute — safe, unlike
-    # exploding the raw expression's attribute, see word_shingles),
-    # but the verify attaches the arrays to the candidate pairs and
-    # computes |A∩B| row-wise — no (doc_b, shingle) compound-key
-    # corpus join, no per-pair aggregation, no sizes passes.
-    arr = cut_lineage(
-        shingle_arrays(df, text_col, id_col, n).withColumn(
-            "_ha", F.xxhash64(F.col("sh_set"))
-        ),
-        eager=False,
-        name="cont-shingle-arrays",
-    )
+    # the rare-shingle blocking needs exploded rows, derived by
+    # exploding the CHECKPOINTED set attribute (safe, unlike exploding
+    # the raw expression's attribute, see word_shingles)
+    arr = _shingle_set_cut(df, text_col, id_col, n, "cont-shingle-arrays")
     sh = arr.select("doc_id", F.explode("sh_set").alias("sh"))
     rare = (
         sh.groupBy("sh")
@@ -1521,41 +1405,8 @@ def containment_near_duplicates(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    ab = (
-        cands.join(
-            arr.withColumnsRenamed(
-                {"doc_id": "doc_a", "sh_set": "_sa", "_ha": "_hha"}
-            ),
-            "doc_a",
-        )
-        .join(
-            arr.withColumnsRenamed(
-                {"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}
-            ),
-            "doc_b",
-        )
-        # bigint: the pre-r16 count aggregate emitted long — the
-        # oracle gate compares numeric TYPES, not just values.
-        # Equal-hash pairs (r17): |A∩A| = |A| exactly, O(1); the
-        # intersect is projected ONCE behind the eval-once barrier
-        # (see _eval_once_barrier — the ratio + filter would otherwise
-        # re-inline it per consumer).
-        .select(
-            "doc_a",
-            "doc_b",
-            _eval_once_barrier(
-                F.when(
-                    (F.col("_hha") == F.col("_hhb"))
-                    & (F.size("_sa") == F.size("_sb")),
-                    F.size("_sa"),
-                ).otherwise(F.size(F.array_intersect("_sa", "_sb"))),
-                "bigint",
-            ).alias("n_inter"),
-            F.least(F.size("_sa"), F.size("_sb")).alias("_minab"),
-        )
-    )
     return (
-        ab
+        _verify_set_pairs(cands, arr, arr)
         # threshold on the RAW ratio; round only in the final select —
         # rounding first admits pairs in [threshold - 5e-7, threshold)
         # that the oracle (raw-ratio HAVING) rejects (r8 ADVICE fix,
@@ -1565,7 +1416,7 @@ def containment_near_duplicates(
         # preserved with no extra gate.
         .withColumn(
             "containment_raw",
-            F.col("n_inter").cast("double") / F.col("_minab"),
+            F.col("n_inter").cast("double") / F.least("_na", "_nb"),
         )
         .filter(F.col("containment_raw") >= F.lit(threshold))
         .select(

@@ -7500,13 +7500,13 @@ def d3b(spark, sf_dir):
     STAGED-projection shape, dedup.minhash_band_key_rows): the same
     (doc_id, band, band_key) rows as the groupBy signature path,
     computed with ZERO shuffle per doc — the form the streaming source
-    uses (streaming_minhash_neardup). r8 re-measurement: the original
+    uses (streaming_minhash_neardup). r8 re-measurement: a
     monolithic-Column form re-evaluated its inlined sub-expressions on
     the interpreted HOF path (~150s at sf0.1); the staged selects cut
     that 11x (~13s), and the batch groupBy form (d3) remains ~5x
     faster again — see minhash_band_key_rows's docstring. This query
-    pins staged-expression ≡ groupBy ≡ SQL oracle equality for the
-    whole hash family."""
+    pins staged-expression ≡ SQL oracle equality for the whole hash
+    family; a unit test pins staged ≡ groupBy."""
     from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_rows
 
     d = load_table(spark, sf_dir, "documents")

@@ -1,6 +1,8 @@
 """r17 skew probe (verdict item 5): K-copy boilerplate doc -> K^2
 candidate pairs. Compares the verify's intersect cost with and without
-the precomputed set-hash short-circuit, on identical candidates.
+the precomputed set-hash short-circuit, on identical candidates: the
+"new" arm is the production verify (dedup._verify_set_pairs and its
+Jaccard scorer), the "old" arm an inline always-intersect baseline.
 
 The OUTPUT is quadratic by contract (every qualifying pair is a result
 row), so K is chosen to keep the row count materialisable; the probe
@@ -15,9 +17,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from cellphe_data_pipeline_spark.session import get_spark
 from cellphe_data_pipeline_spark.checkpoint import cut_lineage
 from cellphe_data_pipeline_spark.operators.dedup import (
+    _jaccard_scores,
+    _shingle_set_cut,
+    _verify_set_pairs,
     lsh_candidate_pairs,
     minhash_band_keys,
-    shingle_arrays,
 )
 from pyspark.sql import functions as F
 
@@ -35,10 +39,7 @@ copies = spark.range(K).select(
 )
 docs = base.unionByName(copies).repartition(32, "doc_id")
 
-arr = cut_lineage(
-    shingle_arrays(docs).withColumn("_ha", F.xxhash64(F.col("sh_set"))),
-    eager=False, name="skew-arr",
-)
+arr = _shingle_set_cut(docs, "text", "doc_id", 3, "skew-arr")
 sh = arr.select("doc_id", F.explode("sh_set").alias("sh"))
 bk = cut_lineage(minhash_band_keys(sh), eager=False, name="skew-bk")
 cand = cut_lineage(lsh_candidate_pairs(bk, dedup=True), eager=False, name="skew-cand")
@@ -47,27 +48,22 @@ print("candidate pairs:", n_cand)
 
 a = cand.join(arr.withColumnsRenamed({"doc_id": "doc_a", "sh_set": "_sa", "_ha": "_hha"}), "doc_a")
 ab = a.join(arr.withColumnsRenamed({"doc_id": "doc_b", "sh_set": "_sb", "_ha": "_hhb"}), "doc_b")
-
-ni_old = F.size(F.array_intersect("_sa", "_sb"))
-ni_new = F.when(
-    (F.col("_hha") == F.col("_hhb")) & (F.size("_sa") == F.size("_sb")), F.size("_sa")
-).otherwise(F.size(F.array_intersect("_sa", "_sb")))
-
-def score(ni):
-    j = ni.cast("double") / (F.size("_sa") + F.size("_sb") - ni)
-    return ab.withColumn("_ni", ni).withColumn("jaccard", j).filter(
-        (F.col("_ni") >= 1) & (F.col("jaccard") >= 0.3)
-    ).select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+ni = F.size(F.array_intersect("_sa", "_sb"))
+j = ni.cast("double") / (F.size("_sa") + F.size("_sb") - ni)
+old = ab.withColumn("_ni", ni).withColumn("jaccard", j).filter(
+    (F.col("_ni") >= 1) & (F.col("jaccard") >= 0.3)
+).select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+new = _jaccard_scores(_verify_set_pairs(cand, arr, arr), 0.3)
 
 def mat(df): df.write.format("noop").mode("overwrite").save()
 # equality of results first
-agg_old = score(ni_old).agg(F.count(F.lit(1)), F.sum("jaccard")).collect()[0]
-agg_new = score(ni_new).agg(F.count(F.lit(1)), F.sum("jaccard")).collect()[0]
+agg_old = old.agg(F.count(F.lit(1)), F.sum("jaccard")).collect()[0]
+agg_new = new.agg(F.count(F.lit(1)), F.sum("jaccard")).collect()[0]
 print("old agg:", tuple(agg_old), " new agg:", tuple(agg_new), " equal:", tuple(agg_old) == tuple(agg_new))
 
 A, B = [], []
 for rep in range(3):
-    t0 = time.perf_counter(); mat(score(ni_old)); A.append(round(time.perf_counter() - t0, 3))
-    t0 = time.perf_counter(); mat(score(ni_new)); B.append(round(time.perf_counter() - t0, 3))
+    t0 = time.perf_counter(); mat(old); A.append(round(time.perf_counter() - t0, 3))
+    t0 = time.perf_counter(); mat(new); B.append(round(time.perf_counter() - t0, 3))
 print(f"K={K}  verify old (always-intersect): {A} min {min(A)}")
 print(f"K={K}  verify new (hash short-circuit): {B} min {min(B)}")

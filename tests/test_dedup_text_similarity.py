@@ -183,28 +183,46 @@ def test_pairwise_jaccard_candidate_first_plan_and_equivalence(spark):
 
 
 def test_minhash_verify_is_rowwise_set_algebra(spark):
-    """r16 (guide §2.3/§2.4): minhash_near_duplicates' exact-Jaccard
+    """r16 (guide §2.3/§2.4): the near-dup family's exact set-overlap
     verify runs ROW-WISE on the per-doc shingle-set arrays. Pins on
     the EXECUTED plan:
 
-    1. the verify is ``array_intersect`` over the candidate join rows
+    1. for minhash (d3), incremental (d10) and containment (d14) the
+       verify is ONE ``array_intersect`` over the candidate join rows
        (the pre-r16 form joined the exploded corpus keyed (doc_b, sh)
-       — a corpus-wide compound-key shuffle at cluster scale);
-    2. no join is keyed on a shingle column at all;
-    3. the band-key signature aggregation does NOT appear in the final
-       plan — it runs exactly once inside its own lineage cut (the LSH
-       self-join's two sides previously each re-ran the partial-min
-       pass), so the final plan sees only checkpoint scans."""
+       — a corpus-wide compound-key shuffle at cluster scale), and it
+       appears EXACTLY once: the opaque_zero barrier keeps the ratio
+       and the filter conjuncts from re-inlining it (~4x per row);
+    2. minhash: no join is keyed on a shingle column at all;
+    3. minhash: the band-key signature aggregation does NOT appear in
+       the final plan — it runs exactly once inside its own lineage
+       cut (the LSH self-join's two sides previously each re-ran the
+       partial-min pass), so the final plan sees only checkpoint
+       scans."""
     import re
 
     from cellphe_data_pipeline_spark.operators.dedup import (
+        containment_near_duplicates,
+        incremental_near_duplicates,
         minhash_near_duplicates,
     )
 
-    df = minhash_near_duplicates(_docs_df(spark), band_size=2)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "array_intersect" in plan
+    docs = _docs_df(spark)
+    plans = {}
+    for name, df in {
+        "minhash": minhash_near_duplicates(docs, band_size=2),
+        "incremental": incremental_near_duplicates(
+            docs.filter("doc_id <= 2"), docs.filter("doc_id > 2"), band_size=2
+        ),
+        "containment": containment_near_duplicates(docs, threshold=0.3),
+    }.items():
+        assert df.collect(), f"{name}: no verified pairs"
+        aqe = df._jdf.queryExecution().executedPlan()
+        plans[name] = aqe.toString()
+        # the AQE node prints its initial plan too: count the final one
+        n = aqe.executedPlan().toString().count("array_intersect")
+        assert n == 1, f"{name}: array_intersect evaluated {n}x (barrier lost)"
+    plan = plans["minhash"]
     assert not re.search(r"Join [^\n]*\bsh#\d+", plan), (
         "verify join keyed on an exploded shingle column"
     )
@@ -1231,32 +1249,28 @@ def test_minhash_expr_bands_plan_has_no_filter(spark):
     band-key explode gets optimizer-rewritten into a per-array-element
     predicate that re-runs the full signature per band (measured 1.8s
     -> 122s at sf0.1). Short docs must be dropped INSIDE the band
-    expression (empty array), leaving no Filter node in the plan."""
-    from pyspark.sql import functions as F
-
-    from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_cols
+    expression (empty array), leaving no Filter node in the plan of the
+    expression form (minhash_band_key_rows, the streaming signature)."""
+    from cellphe_data_pipeline_spark.operators.dedup import minhash_band_key_rows
 
     df = spark.createDataFrame(
         [(1, "a b c d"), (2, "x")], "doc_id bigint, text string"
     )
-    out = df.select(
-        "doc_id", F.explode(minhash_band_key_cols(F.col("text"))).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key")
+    out = minhash_band_key_rows(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Filter" not in plan
     # and the short doc vanished via the empty array, not a filter
     assert {r["doc_id"] for r in out.collect()} == {1}
 
 
-def test_minhash_band_key_rows_matches_groupby_and_column_forms(spark, sf_dir):
-    """The r8 staged-projection form must be bit-identical to BOTH the
-    groupBy row form and the monolithic Column form (the three-way pin
-    behind d3b's oracle claim), including the short-doc empty-array
-    drop and passthrough columns."""
+def test_minhash_band_key_rows_matches_groupby_form(spark, sf_dir):
+    """The r8 staged-projection form must be bit-identical to the
+    groupBy row form (the two-way pin behind d3b's oracle claim; d3b
+    pins the rows form against the DuckDB oracle), including the
+    short-doc empty-array drop and passthrough columns."""
     from pyspark.sql import functions as F
 
     from cellphe_data_pipeline_spark.operators.dedup import (
-        minhash_band_key_cols,
         minhash_band_key_rows,
         minhash_band_keys,
         word_shingles,
@@ -1271,14 +1285,10 @@ def test_minhash_band_key_rows_matches_groupby_and_column_forms(spark, sf_dir):
 
     staged = minhash_band_key_rows(d)
     grouped = minhash_band_keys(word_shingles(d))
-    column = d.select(
-        "doc_id", F.explode(minhash_band_key_cols(F.col("text"))).alias("bk")
-    ).select("doc_id", "bk.band", "bk.band_key")
 
     key = lambda rows: sorted((r[0], r[1], r[2]) for r in rows)
     got = key(staged.collect())
     assert got == key(grouped.collect())
-    assert got == key(column.collect())
     assert not any(r[0] >= 100001 for r in got)  # short docs dropped
 
     # passthrough columns ride every stage
